@@ -51,11 +51,6 @@ class JdbcControlPlane(
 
   private def exec(sql: String): Unit = withConn(_.createStatement().execute(sql))
 
-  private def queryLong(sql: String): Long = withConn { c =>
-    val rs = c.createStatement().executeQuery(sql)
-    rs.next(); rs.getLong(1)
-  }
-
   private def tableExists(name: String): Boolean = withConn { c =>
     val rs = c.getMetaData.getTables(null, null, name.toUpperCase, null)
     try rs.next() finally rs.close()

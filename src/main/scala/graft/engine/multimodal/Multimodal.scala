@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.engine.ops.Checkpoints
+import graft.engine.ops.{Checkpoints, Q}
 
 /** Multimodal column plumbing (north-star): media as opaque `binary`
   * columns with typed metadata, processed in partition-batches.
@@ -253,8 +253,6 @@ object Multimodal {
   }
 
   // ---- declared queries ----
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Metadata-only pass over the media table: byte length + content
     * digest + kind — never decodes, prunes to the needed columns

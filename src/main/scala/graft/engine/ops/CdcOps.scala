@@ -11,8 +11,6 @@ import graft.engine.cdc.Transforms
   * testdata so they are DuckDB-checkable.
   */
 object CdcOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** The compacted-topic key for lineitem's PK (reference
     * seed_store.clj:50-55): JSON array of [col, val, …] pairs sorted by
     * column name. Built with explicit concat (not to_json) so the

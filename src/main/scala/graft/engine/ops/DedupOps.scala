@@ -26,8 +26,6 @@ import graft.engine.Tables
   */
 object DedupOps {
   import TextFeatures._
-  type Q = (SparkSession, String) => DataFrame
-
   private val P = "1000000007"
   private val A = Seq(7, 13, 31, 43, 59, 61, 73, 97, 101, 127, 131, 151, 163, 181, 197, 199)
   private val B = Seq(3, 17, 29, 41, 53, 71, 89, 103, 113, 139, 149, 167, 179, 191, 211, 223)

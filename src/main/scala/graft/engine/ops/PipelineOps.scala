@@ -22,8 +22,6 @@ import graft.engine.Tables
   */
 object PipelineOps {
   import TextFeatures._
-  type Q = (SparkSession, String) => DataFrame
-
   /** Keep thresholds for [[pipelineClean]] (scaled-integer signal
     * space: quality and repetition are basis-point BIGINTs). */
   val MinQuality = 7400L

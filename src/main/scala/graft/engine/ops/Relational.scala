@@ -22,7 +22,6 @@ import graft.engine.Tables
   * broadcast. Nothing here collects to the driver.
   */
 object Relational {
-  type Q = (SparkSession, String) => DataFrame
   private val dec = DecimalType(18, 2)
 
   // ---------------------------------------------------------------- scans

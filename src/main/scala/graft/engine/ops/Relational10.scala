@@ -18,8 +18,6 @@ import graft.engine.Tables
   * unique sort keys on every output, oracle mirrors every cap.
   */
 object Relational10 {
-  type Q = (SparkSession, String) => DataFrame
-
   private val Dec = org.apache.spark.sql.types.DecimalType(18, 2)
 
   // ---------------------------------------------------------------- tpch q5

@@ -15,8 +15,6 @@ import graft.engine.Tables
   * verified), unique sort keys.
   */
 object Relational11 {
-  type Q = (SparkSession, String) => DataFrame
-
   private val Dec = org.apache.spark.sql.types.DecimalType(18, 2)
 
   // ---------------------------------------------------------------- power iteration

@@ -14,8 +14,6 @@ import graft.engine.Tables
   * tiebreaks, unique ORDER BY everywhere.
   */
 object Relational12 {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- tpch q4
 
   /** TPC-H Q4 (order priority checking): orders in one quarter having

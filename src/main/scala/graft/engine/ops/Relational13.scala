@@ -15,8 +15,6 @@ import graft.engine.Tables
   * sort keys.
   */
 object Relational13 {
-  type Q = (SparkSession, String) => DataFrame
-
   private val Dec = org.apache.spark.sql.types.DecimalType(18, 2)
 
   // ---------------------------------------------------------------- tpch q13

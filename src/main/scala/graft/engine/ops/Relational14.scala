@@ -16,8 +16,6 @@ import graft.engine.Tables
   * a predicate), unique sort keys, decimal money.
   */
 object Relational14 {
-  type Q = (SparkSession, String) => DataFrame
-
   private val Dec = org.apache.spark.sql.types.DecimalType(18, 2)
   private def rev = $"l_extendedprice".cast(Dec) *
     (lit(1).cast(Dec) - $"l_discount".cast(Dec))

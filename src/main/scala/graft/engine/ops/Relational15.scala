@@ -36,8 +36,6 @@ import graft.engine.Tables
   * exchange beyond what its join graph demands.
   */
 object Relational15 {
-  type Q = (SparkSession, String) => DataFrame
-
   private val Dec = org.apache.spark.sql.types.DecimalType(18, 2)
   private val DecQty = org.apache.spark.sql.types.DecimalType(18, 0)
   private def rev = $"l_extendedprice".cast(Dec) *

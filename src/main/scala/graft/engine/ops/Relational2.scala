@@ -14,7 +14,6 @@ import graft.engine.Tables
   * rounded float outputs, alias parity with the DuckDB oracles.
   */
 object Relational2 {
-  type Q = (SparkSession, String) => DataFrame
   private val dec = DecimalType(18, 2)
 
   /** ntile(4) buckets of orders per customer by price. */

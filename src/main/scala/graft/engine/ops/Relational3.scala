@@ -12,7 +12,6 @@ import graft.engine.Tables
   * contract as ever (SURVEY §7.3); collected arrays are sorted and
   * string-joined so the cross-engine compare is scalar. */
 object Relational3 {
-  type Q = (SparkSession, String) => DataFrame
   private val dec = DecimalType(18, 2)
 
   /** Extended string function surface. */

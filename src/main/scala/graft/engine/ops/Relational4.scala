@@ -17,7 +17,6 @@ import graft.engine.Tables
   * final sort keys, decimal money math.
   */
 object Relational4 {
-  type Q = (SparkSession, String) => DataFrame
   private val dec = DecimalType(18, 2)
 
   /** Wide-to-long reshape via the native `unpivot` (melt) operator:

@@ -18,8 +18,6 @@ import graft.engine.Tables
   * keys.
   */
 object Relational5 {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Recursive-CTE hierarchy rollup: parts form an implicit 10-ary
     * forest (`parent(p) = p DIV 10`, roots = partkeys < 10); for each
     * root, count its subtree and sum its sizes. Runs on Spark 4's

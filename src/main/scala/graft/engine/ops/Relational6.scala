@@ -17,8 +17,6 @@ import graft.engine.Tables
   * an md5 hex string both engines produce byte-identically.
   */
 object Relational6 {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Batch sessionization (gaps-and-islands): per user, a new session
     * starts at the first event or after a >24 h silence; sessions then
     * aggregate to (n_events, start, end, duration). The classic

@@ -21,8 +21,6 @@ import graft.engine.Tables
   * number of categories 1/Σp² — both exact integer forms.
   */
 object Relational7 {
-  type Q = (SparkSession, String) => DataFrame
-
   /** EWMA smoothing depth: the current value plus 7 lags. */
   val EwmaK = 8
 

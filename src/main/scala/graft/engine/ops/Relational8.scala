@@ -20,8 +20,6 @@ import graft.engine.Tables
   * `round()` on a computed double in a hash-gated column).
   */
 object Relational8 {
-  type Q = (SparkSession, String) => DataFrame
-
   private val Dec = org.apache.spark.sql.types.DecimalType(18, 2)
 
   /** Exact revenue `extendedprice·(1−discount)` in 10⁻⁴ currency

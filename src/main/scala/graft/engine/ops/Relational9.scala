@@ -19,8 +19,6 @@ import graft.engine.Tables
   * can exceed int64, unique sort keys on every output.
   */
 object Relational9 {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- enumerate
 
   /** Stable global row enumeration of documents by (source, doc_id)

@@ -23,8 +23,6 @@ import graft.engine.Tables
   * for recall.
   */
 object SimOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** (vec_id, v: array<double>, nrm) with fold-order-stable norm.
     * Uses the native codegen'd `graft_dot` (see VectorExprs) — same
     * IEEE fold order as the declarative aggregate/zip_with form the

@@ -25,7 +25,6 @@ import graft.engine.Tables
   * sessionization shape, partitioned by user.
   */
 object StreamOps {
-  type Q = (SparkSession, String) => DataFrame
   private val dec = DecimalType(18, 2)
 
   /** Events per 1-hour tumbling window per type. */

@@ -76,8 +76,6 @@ object TextFeatures {
   */
 object TextOps {
   import TextFeatures._
-  type Q = (SparkSession, String) => DataFrame
-
   /** Exact dedup on whitespace/case-normalized text: one survivor (min
     * doc_id) per distinct normalized body + its multiplicity. Single
     * hash-aggregate shuffle on the normalized text; at scale, group on

@@ -1,6 +1,6 @@
 package graft.engine.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -102,8 +102,8 @@ object ControlStream {
     * submissions of the SAME key race on which lifecycle runs first —
     * the at-least-once recheck then drops the loser, so the surviving
     * config would be nondeterministic. Same-key messages share a topic
-    * partition, so their offsets totally order them (the V2 admission
-    * contract); sorting the whole control batch is driver-cheap. */
+    * partition, so their offsets totally order them; sorting the whole
+    * control batch is driver-cheap. */
   private[graft] def processBatch(init: Initializer)(batch: DataFrame): Unit = {
     val ccds = init.decodeCcds(
       batch.sort(col("offset")).select(col("key"), col("value")))
@@ -141,19 +141,4 @@ object ControlStream {
       cadence: String = "5 seconds"): StreamingQuery =
     startSubmissionLoop(store, controlTopic, init, checkpoint,
       Trigger.ProcessingTime(cadence))
-
-  /** Streaming windowed event counts with watermark — the live form of
-    * StreamOps.streamTumbling (same expression tree under readStream). */
-  def windowedCounts(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-
-  /** Streaming exact dedup with watermarked state — the live form of
-    * TextOps.dedupExact (state bounded by the watermark). */
-  def streamingDedup(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(Seq("event_id"))
 }

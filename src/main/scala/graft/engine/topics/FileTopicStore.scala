@@ -54,6 +54,44 @@ object FileTopicStore {
     * first retry is immediate), matching the reference exactly. */
   def backoffMs(attempt: Int): Long =
     2L * math.round(attempt.toDouble * attempt * attempt / 2.0) * 1000L
+
+  /** The one "data files of a topic dir" listing, shared by compaction
+    * and the store's emptiness checks: `*.json`, EXCLUDING dot-prefixed
+    * names. Hidden files are staging artifacts by convention
+    * ([[FileTopicStore.compact]] stages its crash-safe swap
+    * dot-prefixed), and Spark's own InMemoryFileIndex hides them from
+    * every read — so this listing must too, or compaction would retire
+    * and the emptiness check would count files no reader sees. */
+  private[engine] def dataFiles(dir: String): Seq[String] = {
+    val p = Paths.get(dir)
+    if (!Files.isDirectory(p)) Seq.empty
+    else {
+      val ls = Files.list(p)
+      try ls.iterator().asScala
+        .filter { f =>
+          val name = f.getFileName.toString
+          name.endsWith(".json") && !name.startsWith(".")
+        }
+        .map(_.toString).toVector
+      finally ls.close()
+    }
+  }
+
+  private[engine] def nonEmpty(dir: String): Boolean = dataFiles(dir).nonEmpty
+
+  /** Per-partition max offsets of an existing topic log — the base
+    * every append continues from (the broker-metadata lookup). Takes
+    * the appended frame's own session, so a multi-session JVM never
+    * computes offsets with a different session than performs the
+    * write. */
+  private[engine] def partitionBases(dir: String,
+      session: SparkSession): Map[Int, Long] =
+    if (!nonEmpty(dir)) Map.empty
+    else session
+      .read.schema(schema).json(dir)
+      .groupBy(col("partition"))
+      .agg(max("offset"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 }
 
 /** @param root          directory holding one subdirectory per topic
@@ -167,7 +205,7 @@ class FileTopicStore(
     * partition. One of the few sanctioned RDD uses: genuine
     * per-partition indexing. */
   def append(topic: String, kv: DataFrame): Unit = {
-    check("append", topic) // same injectable-fault point as appendV2
+    check("append", topic)
     if (!exists(topic)) create(topic)
     // With a dirty ratio configured, ONE scan serves both the offset
     // bases and the dirty-ratio stats (the policy therefore sees the
@@ -176,13 +214,11 @@ class FileTopicStore(
     // the cheap max-only bases scan suffices: the full stats pass
     // runs a countDistinct over the ENTIRE log, and paying a
     // distinct-aggregation per append just to discard the counts
-    // makes append cost grow with log size for nothing (appendV2
-    // makes the same split).
+    // makes append cost grow with log size for nothing.
     val stats =
       if (dirtyRatio.isDefined) Some(topicStats(topic)) else None
     val bases: Map[Int, Long] = stats.map(_.bases).getOrElse(
-      graft.engine.sources.TopicLog.partitionBases(
-        dir(topic).toString, kv.sparkSession))
+      FileTopicStore.partitionBases(dir(topic).toString, kv.sparkSession))
     val session = kv.sparkSession
     val now = new java.sql.Timestamp(System.currentTimeMillis())
     val seqCol =
@@ -223,8 +259,7 @@ class FileTopicStore(
   private case class TopicStats(
       bases: Map[Int, Long], keyedTotal: Long, keyedLive: Long)
 
-  /** The one dirty-ratio compaction policy, shared by both append
-    * paths so they cannot diverge. */
+  /** The dirty-ratio compaction policy, applied after each append. */
   private def maybeCompact(topic: String, stats: TopicStats): Unit =
     dirtyRatio.foreach { threshold =>
       if (!dirtyRatioExempt.contains(topic) && stats.keyedTotal > 0 &&
@@ -255,7 +290,7 @@ class FileTopicStore(
 
   // shared listing contract (excludes dot-prefixed staging artifacts)
   private def hasFiles(topic: String): Boolean =
-    graft.engine.sources.TopicLog.nonEmpty(dir(topic).toString)
+    FileTopicStore.nonEmpty(dir(topic).toString)
 
   /** Storage-side compaction: rewrite the log keeping only the latest
     * message per key (Kafka's background log cleaner, triggered
@@ -286,8 +321,7 @@ class FileTopicStore(
     // or as explicit maintenance), so no file appears between this
     // listing and the survivor frame's.
     val old: Seq[Path] =
-      graft.engine.sources.TopicLog.dataFiles(dir(topic).toString)
-        .map(Paths.get(_))
+      FileTopicStore.dataFiles(dir(topic).toString).map(Paths.get(_))
     // Survivor set from ONE pinned listing — readCompacted IS the
     // survivor semantics (latest per key ∪ all un-keyed rows). Deriving
     // the un-keyed half from a second spark.read would list the
@@ -350,79 +384,8 @@ class FileTopicStore(
     spark.read.schema(FileTopicStore.schema).json(dir(topic).toString)
       .orderBy(col("partition"), col("offset"))
 
-  /** DataSource V2 read of the full log
-    * ([[graft.engine.sources.TopicSource]]): per-file scan splits,
-    * offset/partition predicate pushdown, column pruning. Unordered —
-    * consumers that need offset order sort explicitly. */
-  def readV2(topic: String): DataFrame =
-    spark.read.format(classOf[graft.engine.sources.TopicSource].getName)
-      .load(dir(topic).toString)
-
-  /** DataSource V2 append ([[graft.engine.sources.TopicSource]] write
-    * path): same contract as [[append]] — key-hash routing, optional
-    * `seq` intra-append ordering, per-partition offset continuation —
-    * but fully plan-level: the connector's Write declares
-    * `RequiresDistributionAndOrdering` (clustered by partition, sorted
-    * by sequence), so Spark plans the routing exchange + sort and each
-    * task streams its partitions' rows out with task-commit atomicity.
-    * No RDD hop, no driver-side rows. */
-  def appendV2(topic: String, kv: DataFrame): Unit = {
-    check("append", topic)
-    if (!exists(topic)) create(topic)
-    // ONE log scan per append, exactly like append(): with a dirty
-    // ratio configured, the stats pass yields both the write path's
-    // base offsets (forwarded through the connector option, skipping
-    // its own scan) and the pre-append dirty-ratio inputs; without
-    // one, the cheap max-only bases scan suffices — no discarded
-    // countDistinct over the whole log
-    val stats =
-      if (dirtyRatio.isDefined) Some(topicStats(topic)) else None
-    val bases = stats.map(_.bases).getOrElse(
-      graft.engine.sources.TopicLog.partitionBases(
-        dir(topic).toString, kv.sparkSession))
-    routed(kv)
-      .write.format(classOf[graft.engine.sources.TopicSource].getName)
-      .option(graft.engine.sources.TopicSource.BasesOption,
-        graft.engine.sources.TopicSource.encodeBases(bases))
-      .mode("append")
-      .save(dir(topic).toString)
-    // same self-compaction invariant as append() (pre-append stats)
-    stats.foreach(maybeCompact(topic, _))
-  }
-
-  /** Route a (key, value[, seq]) frame into the connector's write
-    * schema: key-hash topic-partition + intra-append sequence in the
-    * `offset` column (real offsets are assigned by the writer,
-    * broker-side). */
-  private def routed(kv: DataFrame): DataFrame = {
-    val seqCol =
-      if (kv.columns.contains("seq")) col("seq").cast("long") else lit(0L)
-    kv.select(
-      col("key").cast("string").as("key"),
-      col("value").cast("string").as("value"),
-      partitionOf(col("key")).as("partition"),
-      seqCol.as("offset"),
-      lit(null).cast("timestamp").as("ts"))
-  }
-
-  /** Streaming producer: run a streaming (key, value) frame into the
-    * topic through the connector's STREAMING_WRITE path — the
-    * `writeStream → topic` half of the V2 connector, replacing
-    * foreachBatch+append for simple keyed sinks. At-least-once; offsets
-    * are per-partition monotone across epochs (epoch-block scheme, see
-    * TopicStreamingWrite). */
-  def writeStreamV2(topic: String, kv: DataFrame,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    check("append", topic)
-    if (!exists(topic)) create(topic)
-    routed(kv)
-      .writeStream.format(classOf[graft.engine.sources.TopicSource].getName)
-      .option("checkpointLocation", checkpoint)
-      .start(dir(topic).toString)
-  }
-
   /** Compaction-on-read: latest row per KEY, with every un-keyed row
-    * passed through — the same contract as [[compactStorage]] (a
+    * passed through — the same contract as [[compact]] (a
     * groupBy over `key` would collapse all null keys into one
     * surviving row, which no log compactor does: un-keyed records
     * have no identity to compact under). Round-9 fuzzing caught the
@@ -460,14 +423,14 @@ class FileTopicStore(
       .unionAll(raw.filter(col("key").isNull))
   }
 
-  def readStream(topic: String): DataFrame = readStream(topic, 100)
+  /** Admission control per micro-batch — the engine analog of the
+    * reference's bounded work queue (initializer.clj:87, buffer 100):
+    * limits how much backlog one trigger admits so a large catch-up
+    * can't starve the loop. */
+  private val MaxFilesPerTrigger = 100
 
-  /** @param maxFilesPerTrigger admission control per micro-batch — the
-    *   engine analog of the reference's bounded work queue
-    *   (initializer.clj:87, buffer 100): limits how much backlog one
-    *   trigger admits so a large catch-up can't starve the loop. */
-  def readStream(topic: String, maxFilesPerTrigger: Int): DataFrame =
+  def readStream(topic: String): DataFrame =
     spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", MaxFilesPerTrigger)
       .schema(FileTopicStore.schema).json(dir(topic).toString)
 }

@@ -12,7 +12,7 @@ import graft.engine.topics.FileTopicStore
 
 /** Streaming control path: submissions tail → foreachBatch
   * orchestration → status write-back; flatMapGroupsWithState status
-  * machine; watermarked streaming aggregates. */
+  * machine; a watermarked session-window stream. */
 class ControlStreamSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.session
   import spark.implicits._
@@ -152,59 +152,6 @@ class ControlStreamSpec extends AnyFunSuite {
     val closed = spark.table("session_stream").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(closed == Seq((7L, 2L)), s"first session closed with 2 events, got $closed")
-  }
-
-  test("streaming dedup drops replayed events within the watermark") {
-    import ControlStream.KeyedStatus
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, java.sql.Timestamp)]
-    val events = in.toDS().toDF("event_id", "ts")
-    val q = ControlStream.streamingDedup(events, "10 minutes")
-      .writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    val t0 = 1700000000000L
-    in.addData((1L, new java.sql.Timestamp(t0)), (2L, new java.sql.Timestamp(t0 + 1000)))
-    q.processAllAvailable()
-    in.addData((1L, new java.sql.Timestamp(t0 + 2000)), // replay of id 1 → dropped
-      (3L, new java.sql.Timestamp(t0 + 3000)))
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.table("dedup_stream").select("event_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(ids == Seq(1L, 2L, 3L))
-  }
-
-  test("watermarked windowed counts run as a stream over the events table") {
-    // stream the real events through a file source by pointing at the
-    // parquet directly (batch schema == stream schema)
-    val events = graft.engine.Tables.events(spark, sf)
-    val batchSchema = spark.read.parquet(s"$sf/events.parquet").schema
-    val raw = spark.readStream.schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sf)
-    // same schema dispatch as Tables.events: nanos-as-long generations
-    // need the DIV truncation, micros generations arrive as
-    // TIMESTAMP_NTZ — cast to TIMESTAMP (session tz is UTC, values
-    // identical) because EventTimeWatermark rejects NTZ event time
-    val streamed = batchSchema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts DIV 1000")))
-      case _ =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-    }
-    val q = ControlStream.windowedCounts(streamed)
-      .writeStream.format("memory").queryName("win_counts")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamTotal = spark.table("win_counts")
-      .agg(org.apache.spark.sql.functions.sum("n")).first.getLong(0)
-    assert(streamTotal == events.count(), "every event lands in exactly one window")
   }
 
   test("same-millisecond same-key submissions process in topic-offset " +

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{Bucketing, Metrics, Tables}
+import graft.engine.{Metrics, Tables}
 
 /** Numeric scaling properties, measured not inferred: what each plan
   * class actually shuffles at runtime, and what a partition-pruned
@@ -185,32 +185,6 @@ class MetricsSpec extends AnyFunSuite {
     assert(s.recordsWritten < 6 * cand,
       s"shuffled ${s.recordsWritten} records vs $cand bucketed candidates — " +
         s"the join went quadratic: $s")
-  }
-
-  test("partitioned write + filtered read prunes to matching directories only") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
-    Bucketing.writePartitioned(
-      Tables.documents(spark, sf).select($"doc_id", $"text", $"lang"),
-      dir, Seq("lang"))
-    val pruned = Bucketing.readPruned(spark, dir, Map("lang" -> "en"))
-    // execution truth: which files were ACTUALLY opened for the rows
-    val touched = pruned.select(input_file_name()).distinct()
-      .collect().map(_.getString(0))
-    assert(touched.nonEmpty && touched.forall(_.contains("lang=en")),
-      s"scan touched non-matching partitions: ${touched.toSeq}")
-    val allFiles = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(dir)).count(_.getName.endsWith(".parquet"))
-    }
-    assert(touched.length < allFiles,
-      s"read ${touched.length} of $allFiles files — nothing was pruned")
-    val expected = Tables.documents(spark, sf).filter($"lang" === "en").count()
-    assert(pruned.count() == expected, "pruning must not change results")
-    // and the pruning is visible in the plan, not just the file list
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan)
   }
 
   test("power-iteration aggregate shuffles O(dims × partitions), not O(rows)") {

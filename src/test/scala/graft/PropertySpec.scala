@@ -271,7 +271,7 @@ class PropertySpec extends AnyFunSuite {
   test("hot-shingle cap only ever removes near-dup pairs, never adds") {
     import graft.engine.ops.DedupOps
     val sf = "/root/testdata/sf0.001"
-    def pairs(q: DedupOps.Q): Set[(Long, Long)] =
+    def pairs(q: graft.engine.ops.Q): Set[(Long, Long)] =
       q(spark, sf).select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val uncapped = pairs(DedupOps.dedupNearCapped(Long.MaxValue))

@@ -250,6 +250,44 @@ class Relational8Spec extends AnyFunSuite {
     assert(df.collect().toSeq == plain.toSeq)
   }
 
+  test("join_bucketed survives an orphaned warehouse dir from a dead JVM") {
+    // The round-5 failure mode: the in-memory catalog dies with the JVM
+    // but `spark-warehouse/graft_bkt_*` persists, so a fresh session's
+    // saveAsTable hits "managed table location already exists". Simulate
+    // the fresh JVM by planting orphan dirs at the exact table paths
+    // with NO catalog entries, then run the query end to end.
+    import org.apache.spark.sql.functions._
+    val tag = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(sf.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    val names = Seq(s"graft_bkt_orders_$tag", s"graft_bkt_lineitem_$tag")
+    val wh = new java.io.File(
+      new java.net.URI(spark.sessionState.conf.warehousePath).getPath)
+    names.foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val orphan = new java.io.File(wh, t.toLowerCase)
+      orphan.mkdirs()
+      java.nio.file.Files.write(orphan.toPath.resolve("part-stale.parquet"),
+        Array[Byte](1, 2, 3))
+    }
+    try {
+      val got = Relational8.joinBucketed(spark, sf).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      val expected = engine.Tables.orders(spark, sf)
+        .select(col("o_orderkey"), col("o_orderpriority"))
+        .join(engine.Tables.lineitem(spark, sf), col("o_orderkey") === col("l_orderkey"))
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n_items"))
+        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+      assert(got.nonEmpty)
+      got.foreach { case (prio, _, n) => assert(expected(prio) == n) }
+      // and a second call in the SAME session reuses the tables (no rewrite)
+      val again = Relational8.joinBucketed(spark, sf).collect()
+      assert(again.length == got.length)
+    } finally {
+      names.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("win_hampel: flags recompute from scratch and median spikes don't self-mask") {
     val rows = Relational8.winHampel(spark, sf).collect()
     val byUser = rows.groupBy(_.getLong(0))

@@ -118,8 +118,11 @@ class TopicStoreSpec extends AnyFunSuite {
     store.create("t")
     val keys = (1 to 100).map(i => (s"k$i", s"v$i"))
     store.append("t", keys.toDF("key", "value"))
-    store.append("t", Seq(("k1", "v1b"), ("k2", "v2b")).toDF("key", "value"))
+    store.append("t", Seq(("k1", "v1b"), ("k2", "v2b"), (null: String, "bare"))
+      .toDF("key", "value"))
     val all = store.readAll("t").collect()
+    assert(all.filter(_.isNullAt(0)).map(_.getInt(2)).toSeq == Seq(0),
+      "an un-keyed message routes to partition 0")
     // every key is always in the same partition; offsets are dense per partition
     val byPartition = all.groupBy(_.getInt(2))
     byPartition.foreach { case (_, rows) =>
@@ -131,7 +134,29 @@ class TopicStoreSpec extends AnyFunSuite {
     // compaction keeps the replays' latest values across partitions
     val m = store.readCompacted("t").select("key", "value")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(m.size == 100 && m("k1") == "v1b" && m("k2") == "v2b" && m("k3") == "v3")
+    assert(m.size == 101 && m("k1") == "v1b" && m("k2") == "v2b" && m("k3") == "v3")
+  }
+
+  test("readStream admits a backlog at most 100 files per micro-batch") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    val (store, root) = freshStore()
+    store.create("t")
+    // 101 one-message log files, written directly: appending them one
+    // by one would cost 101 Spark jobs for the same backlog
+    (0 until 101).foreach { i =>
+      Files.writeString(java.nio.file.Paths.get(root, "t", f"part-$i%03d.json"),
+        s"""{"key":"k$i","value":"v$i","partition":0,"offset":$i}""" + "\n")
+    }
+    val sizes = scala.collection.mutable.Buffer[Long]()
+    val q = store.readStream("t").writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-topics-adm").toString)
+      .foreachBatch { (b: DataFrame, _: Long) => sizes += b.count(); () }
+      .start()
+    q.awaitTermination()
+    assert(sizes.toSeq == Seq(100L, 1L), s"micro-batch sizes: $sizes")
   }
 
   test("cube-law backoff curve matches the reference (topic_store.clj:21-27)") {
